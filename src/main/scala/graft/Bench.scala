@@ -7,56 +7,30 @@ object Bench {
     * parquet scan), so reduce a hash over the full row instead. XOR, not
     * sum — summing xxhash64 longs overflows under ANSI mode once row
     * counts grow (the silent killer behind round-2's unreliable tail). */
-  private def consume(df: DataFrame): Unit =
+  def consume(df: DataFrame): Unit =
     df.agg(bit_xor(xxhash64(struct(df.columns.map(df.col): _*)))).collect()
+
+  /** Warm the JIT/codegen paths of every query at the smallest scale
+    * factor first: 43 distinct whole-stage-codegen plans otherwise
+    * saturate the compile queue and charge minutes of interpreter time
+    * to whichever heavy query runs next. Warmup is not timed, and its
+    * caches must not serve the timed run. */
+  def warmUp(spark: SparkSession,
+      queries: Seq[(SparkSession, String) => DataFrame]): Unit = {
+    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
+      "/root/testdata/sf0.001")
+    queries.foreach { fn =>
+      try consume(fn(spark, warmDir)) catch { case _: Throwable => () }
+    }
+    spark.catalog.clearCache()
+    System.gc() // settle warmup garbage before any timing starts
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // events.ts is written tz-naive (isAdjustedToUTC=false); read it as
-      // TIMESTAMP (session tz is UTC, so values are identical) so that
-      // withWatermark / window accept it — NTZ has no streaming event time.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the SQL front door — x_sql_* bench queries run through sql()
-      .withExtensions(new graft.plans.GraftExtensions())
-      // 220 queries × many codegen'd stages in ONE JVM: the default
-      // 100-entry generated-class cache evicts constantly, so later
-      // queries pay Janino recompiles the warmup already did (static
-      // conf — must be set before the session exists). A cluster never
-      // sees this: each executor compiles its own stages once. Sized
-      // WELL past the query count: at 2000 the r10 220-query sweep
-      // thrashed it and the deepest pipeline (x_cluster_store: clone +
-      // admission + label maintenance + read, dozens of stages per
-      // attempt) re-Janino'd every attempt, 6.2 s → 26.7 s.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // AQE coalescing inside cached plans (guide §2.2): operator
-      // caches (CacheRegistry) otherwise materialize at the static
-      // shuffle width and every downstream stage inherits that layout;
-      // no operator depends on cached output partitioning, and results
-      // are partition-count independent (decimal-sum discipline).
-      // Measured −24% on x_neardup_append, r14 opt round.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Warm the JIT/codegen paths of every query at the smallest scale
-    // factor first: 43 distinct whole-stage-codegen plans otherwise
-    // saturate the compile queue and charge minutes of interpreter time
-    // to whichever heavy query runs next. Warmup is not timed.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    ordered.foreach { case (_, fn) =>
-      try { consume(fn(spark, warmDir)) } catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache() // warmup caches must not serve the timed run
-    System.gc() // settle warmup garbage before any timing starts
+    warmUp(spark, ordered.map(_._2))
     // The ANN serving entries time the SERVE path (that is the number a
     // 100 TB deployment lives on): build the persisted indexes once
     // here — marker-gated, so a warm box skips it entirely — and ship

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf0.1 → sf1 scaling probe: runs the suite's heaviest NON-streaming
@@ -86,28 +86,13 @@ object ScaleProbe {
     ()
   }
 
-  private def consume(df: DataFrame): Unit =
-    df.agg(bit_xor(xxhash64(struct(df.columns.map(df.col): _*))))
-      .collect()
-
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
       java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft-sf1").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions())
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     ensureSf1(spark, src, sf1)
     // optional args(0) regex: probe a subset (e.g. re-measure one
     // mover after a fix). Filtered runs keep the committed full
@@ -120,26 +105,12 @@ object ScaleProbe {
       if (probeQueries == ProbeQueries) "BENCH_sf1_probe.json"
       else "/tmp/BENCH_sf1_probe_subset.json")
     // JIT/codegen warmup at the smallest sf, exactly like Bench
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    probeQueries.foreach { name =>
-      try consume(SparkEntry.queries(name)(spark, warmDir))
-      catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache()
-    System.gc()
-    def timeAt(dir: String, name: String): Seq[Double] =
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        consume(SparkEntry.queries(name)(spark, dir))
-        spark.catalog.clearCache()
-        (System.nanoTime() - t0) / 1e9
-      }
+    Bench.warmUp(spark, probeQueries.map(SparkEntry.queries))
     def d3(x: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
     val rows = probeQueries.map { name =>
-      val a = timeAt(src, name)
-      val b = timeAt(sf1, name)
+      val a = Probe.timeRuns(spark, SparkEntry.queries(name), src)
+      val b = Probe.timeRuns(spark, SparkEntry.queries(name), sf1)
       System.gc()
       val line = (name, a.min, b.min, b.min / a.min, a.sorted, b.sorted)
       System.err.println(f"[probe] $name%-24s sf0.1 ${a.min}%7.2f s   " +

@@ -25,9 +25,8 @@ object SyncApp {
     val spark = source.sparkSession
     val state = StateStore.readOrCreate(spark, paths.state)
     val r = SyncEngine.run(source, state, windowStart, windowEnd)
-    // No lineage break needed: overwrite writes the whole frame to a tmp
-    // path while the live state is still in place, and only then swaps —
-    // nothing re-reads the old files after the rename. (A localCheckpoint
+    // No lineage break needed: overwrite publishes a new snapshot version
+    // and leaves the files `state` reads in place. (A localCheckpoint
     // here would pin the state in executor storage and die with an
     // executor at cluster scale.)
     val next = r.newState

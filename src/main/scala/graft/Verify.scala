@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,31 +11,7 @@ object Verify {
     val nameFilter: String => Boolean =
       if (args.length > 2) { val r = args(2).r; n => r.findFirstIn(n).nonEmpty }
       else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // events.ts is written tz-naive (isAdjustedToUTC=false); read it as
-      // TIMESTAMP (session tz is UTC, so values are identical) so that
-      // withWatermark / window accept it — NTZ has no streaming event time.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the SQL front door (graft_* scalar + table functions) — the
-      // x_sql_* queries prove SQL-path ≡ Scala-path on shared oracles
-      .withExtensions(new graft.plans.GraftExtensions())
-      // same single-JVM codegen-cache sizing as Bench: 225 queries of
-      // stages thrashed the earlier 2000-entry setting (static conf,
-      // set pre-session; see Bench.scala for the measured effect)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // AQE coalescing inside cached plans — same session shape as
-      // Bench (see the comment there; Verify must run the same plans
-      // the bench times)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach {
       case (name, fn) =>

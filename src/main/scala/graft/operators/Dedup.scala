@@ -37,18 +37,6 @@ object Dedup {
       exactGroups(docs, idCol, textCol).select(col("keeper_id").as(idCol)),
       Seq(idCol), "left_semi")
 
-  /** A small parquet corpus arrives as one partition; everything downstream
-    * (hashing, inverted-index joins, 64-column aggregates) is compute-bound,
-    * so fan the rows out to the session's shuffle width first. GUARDED on
-    * the input's actual partition count (r14, guide §2.4): at real scale
-    * the scan is already wide and the repartition would shuffle the whole
-    * payload for nothing. Callers pass scan-shaped frames, so reading the
-    * partition count plans the scan without running a job. */
-  private def fanOut(docs: DataFrame): DataFrame = {
-    val want = docs.sparkSession.sessionState.conf.numShufflePartitions
-    if (docs.rdd.getNumPartitions >= want) docs else docs.repartition(want)
-  }
-
   /** Shingles appearing in more than this many documents are dropped from
     * the shingle vocabulary before ANY similarity work: a shingle shared
     * by f docs contributes f² inverted-index join rows, so one boilerplate
@@ -445,14 +433,6 @@ object Dedup {
       // that materializes the round's cache
       l.agg(sum(col("label").cast("decimal(38,0)"))).collect().head
         .getDecimal(0)
-    val debug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    def timed[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (debug) System.err.println(
-        f"[cc] $what%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
     // No action before the loop: when any edge exists, round 1 always
     // makes progress, so the first sum only needs comparing from round 2
     // — one fewer driver round-trip (each is a full job at scale).
@@ -477,9 +457,9 @@ object Dedup {
       // .unpersist cannot — they never enter the CacheManager). On a
       // cluster this is the checkpoint-every-round the Scaladoc
       // describes.
-      val next = timed(s"round ${iter + 1}")(
-        round(labels, halve = iter > 0).localCheckpoint(eager = false))
-      val s = timed(s"sum ${iter + 1}")(labelSum(next))
+      val next = round(labels, halve = iter > 0)
+        .localCheckpoint(eager = false)
+      val s = labelSum(next)
       labels = next
       done = s == null || // an empty endpoint set never changes
         prevSum.exists(p => p != null && p.compareTo(s) == 0)

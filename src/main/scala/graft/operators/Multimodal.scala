@@ -175,27 +175,16 @@ object Multimodal {
     * without an image library); audio/video carry a 4-byte fake header
     * (width, height) + UTF-8 text body. Stands in for a parquet of real
     * encoded media. */
-  /** A single-file parquet corpus arrives as ONE partition, and the
-    * fixture tables below pin that layout through `localCheckpoint` —
-    * so every per-query decode pass (aHash, feature extraction, PCM
-    * DSP) ran as ONE task regardless of core count, which is exactly
-    * why the media family scaled INVERSELY with cores in the r14
-    * driver bench (the work was serial; extra cores only added
-    * scheduling overhead on the tiny downstream stages). Fan the rows
-    * out to the session width BEFORE the one-time checkpoint, guarded
-    * on the input's partition count (guide §2.4): an already-wide scan
-    * at real scale is untouched, and no per-query shuffle is added —
-    * the checkpoint pays the small (id, text) exchange once per
-    * session. Every consumer is per-row or keyed, so results are
-    * layout-independent. */
-  private def fanOut(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions >= want) df else df.repartition(want)
-  }
-
   def mediaFromDocuments(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    // The fixture tables below pin this layout through `localCheckpoint`,
+    // so without the fan-out every per-query decode pass (aHash, feature
+    // extraction, PCM DSP) ran as ONE task regardless of core count — the
+    // media family scaled INVERSELY with cores in the r14 bench.
+    // Fanning out BEFORE the one-time checkpoint adds no per-query
+    // shuffle; every consumer is per-row or keyed, so results are
+    // layout-independent.
     fanOut(docs.select(col("doc_id"), col("text"))).as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
         val kind = Seq("image", "audio", "video")((id % 3).toInt)

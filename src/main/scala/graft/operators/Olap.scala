@@ -321,12 +321,7 @@ object Olap {
     // the projected doubles, the decimal sums are order-independent, and
     // wide-at-scale inputs skip the shuffle via the partition-count
     // guard.
-    val fanned = {
-      val base = df.select(cols.distinct.map(col): _*)
-      val want = df.sparkSession.sessionState.conf.numShufflePartitions
-      if (base.rdd.getNumPartitions >= want) base
-      else base.repartition(want)
-    }
+    val fanned = fanOut(df.select(cols.distinct.map(col): _*))
     val row = fanned.agg(aggs.head, aggs.tail: _*)
     val corrs = pairs.flatMap { case (a, b) =>
       val num = col("n") * col(s"sp_${a}_$b") -

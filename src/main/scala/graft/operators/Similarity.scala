@@ -42,19 +42,6 @@ object Similarity {
   private def cosRaw(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  /** A small parquet corpus arrives as one partition; the pair stages that
-    * follow are compute-bound (millions of dot products), so fan the rows
-    * out to the session's shuffle width first. GUARDED on the input's
-    * actual partition count (r14, guide §2.4): at real scale the scan is
-    * already wide and the repartition would be a full payload shuffle for
-    * nothing — the guard makes it a no-op there. Callers pass scan-shaped
-    * frames (no upstream exchange), so reading the partition count plans
-    * the scan without running a job. */
-  private def fanOut(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions >= want) df else df.repartition(want)
-  }
-
   /** Select (idAs, unit-normalized vector) — norm computed once per row. */
   private def unitVecs(df: DataFrame, idCol: String, vecCol: String,
       idAs: String, vecAs: String): DataFrame =

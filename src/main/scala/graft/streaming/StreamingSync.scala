@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.operators.SyncEngine
-import graft.sources.StateStore
+import graft.SyncApp
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * `foreachBatch(sync)`, with the lookback window re-derived per batch from
   * the batch's own event dates.
   *
-  * State lives in the [[StateStore]] parquet table (read → merge →
+  * State lives in the [[graft.sources.StateStore]] parquet table (read → merge →
   * overwrite per micro-batch), which is exactly the reference's
   * read-the-sheets-each-run model; watermarked windowed aggregation covers
   * the `totales`-style continuous views.
@@ -898,17 +897,9 @@ object StreamingSync {
   def runBatch(batch: DataFrame, statePath: String, auditPath: String,
       conflictPath: String, lookbackDays: Int): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
     val end = batch.agg(max(col("fecha"))).collect().head.getDate(0)
     val start = java.sql.Date.valueOf(end.toLocalDate.minusDays(lookbackDays))
-    val state = StateStore.readOrCreate(spark, statePath)
-    val r = SyncEngine.run(batch, state, start.toString, end.toString)
-    // no lineage break: overwrite stages the full frame under a tmp path
-    // while the live state still exists, then swaps (see SyncApp.sync)
-    val next = r.newState
-      .select(StateStore.StateSchema.fieldNames.map(col): _*)
-    StateStore.append(r.audit, auditPath)
-    StateStore.append(r.conflicts, conflictPath)
-    StateStore.overwrite(next, statePath)
+    SyncApp.sync(batch, SyncApp.Paths(statePath, auditPath, conflictPath),
+      start.toString, end.toString)
   }
 }

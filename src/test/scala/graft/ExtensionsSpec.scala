@@ -1,33 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** SparkSessionExtensions wiring: the VectorFusion optimizer rule and the
-  * SQL-registered vector functions, on a session created with
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class ExtensionsSpec extends AnyFunSuite {
-
-  /** Own session on the shared context — extensions only apply at session
-    * construction (`spark.sql.extensions` is static and cannot attach to
-    * a live context), so the suite builds one via `withExtensions` and
-    * restores the shared session as default afterwards. */
-  private lazy val ext: SparkSession = {
-    val base = SparkSpec.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
-  }
+  * SQL-registered vector functions, on the shared session that
+  * [[graft.Session]] builds with `GraftExtensions`. */
+class ExtensionsSpec extends SparkSpec {
 
   private def hofDot = aggregate(
     zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0),
@@ -35,14 +13,14 @@ class ExtensionsSpec extends AnyFunSuite {
 
   /** range-backed (not a LocalRelation, so the projection is not folded
     * away before the optimizer rule can be observed); row id 1 is ragged. */
-  private def vecs(s: SparkSession) =
-    s.range(3).select(
+  private def vecs =
+    spark.range(3).select(
       when(col("id") === 1, array(lit(1.0), lit(2.0)))
         .otherwise(array(lit(1.0), lit(2.0), lit(3.0))).as("a"),
       array(lit(4.0), lit(5.0), lit(6.0)).as("b"))
 
   test("graft_dot and graft_zip_dot are SQL-callable") {
-    val r = ext.sql(
+    val r = spark.sql(
       """SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
         |       graft_zip_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS z,
         |       graft_zip_dot(array(1.0D), array(3.0D, 4.0D)) AS ragged
@@ -53,7 +31,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("graft_shingles and graft_deflate_ratio are SQL-callable") {
-    val r = ext.sql(
+    val r = spark.sql(
       """SELECT graft_shingles('a b c d', 3) AS sh,
         |       graft_deflate_ratio('') AS empty,
         |       graft_deflate_ratio(repeat('ab ', 400)) AS rep
@@ -64,17 +42,17 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("graft_bpe_merge is SQL-callable and validates arity") {
-    val r = ext.sql(
+    val r = spark.sql(
       """SELECT graft_bpe_merge(array('a', 'b', 'a', 'b'), 'a', 'b') AS m
         |""".stripMargin).collect().head
     assert(r.getSeq[String](0) === Seq("ab", "ab"))
     val e = intercept[Exception](
-      ext.sql("SELECT graft_bpe_merge(array('a'), 'a')").collect())
+      spark.sql("SELECT graft_bpe_merge(array('a'), 'a')").collect())
     assert(e.getMessage.contains("graft_bpe_merge"))
   }
 
   test("VectorFusion rewrites the HOF dot pattern into ZipDot") {
-    val df = vecs(ext).select(hofDot.as("d"))
+    val df = vecs.select(hofDot.as("d"))
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(optimized.contains("zipdot") ||
       optimized.toLowerCase.contains("zipdot"))
@@ -82,14 +60,30 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("fusion preserves HOF semantics, including ragged-array NULL") {
-    val fused = vecs(ext).select(hofDot.as("d"))
+    val fused = vecs.select(hofDot.as("d"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    // the shared session (which also carries the extensions) must agree
-    val baseline = vecs(SparkSpec.spark).select(hofDot.as("d"))
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    assert(fused.toSeq === baseline.toSeq)
     // hand-computed HOF semantics: ragged row 1 → NULL, others 32.0
     assert(fused.toSeq === Seq(Some(32.0), None, Some(32.0)))
+  }
+
+  test("Session is the only SparkSession factory, with the Bench confs") {
+    // split so this file does not match its own scan
+    val needle = "SparkSession" + ".builder"
+    val roots = Seq("src/main", "src/test").map(java.nio.file.Paths.get(_))
+    assert(roots.forall(java.nio.file.Files.isDirectory(_)))
+    import scala.jdk.CollectionConverters._
+    val builders = roots.flatMap(r =>
+        java.nio.file.Files.walk(r).iterator().asScala.toSeq)
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Session.scala" &&
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .contains(needle))
+    assert(builders.isEmpty, s"$needle outside Session.scala: $builders")
+    assert(spark.sparkContext.getConf
+      .get("spark.sql.codegen.cache.maxEntries") === "10000")
+    assert(spark.conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") === "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
   }
 
   private val d = "/root/testdata/sf0.001"

@@ -5,32 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // events.ts is written tz-naive (isAdjustedToUTC=false); read it as
-      // TIMESTAMP (session tz is UTC, so values are identical) so that
-      // withWatermark / window accept it — NTZ has no streaming event time.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the SQL front door, same as Verify/Bench — suites can exercise
-      // graft_* SQL functions on the shared session
-      .withExtensions(new graft.plans.GraftExtensions())
-      // one JVM runs every suite's plans: avoid generated-class cache
-      // thrash (same static conf Bench/Verify set)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // cached-plan AQE, same as Bench/Verify — the suites must pin
-      // the exact plans the driver contract runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(cores = 8)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -11,8 +11,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# session confs are set by graft.Session, not here
 exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-28g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Dspark.sql.legacy.parquet.nanosAsLong=true \
   -Dlog4j2.level=warn \
   -cp "$CP" "$@"
