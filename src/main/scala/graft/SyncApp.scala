@@ -6,6 +6,7 @@ import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** App layer (SURVEY.md §7.1-7): the reference's two 95%-duplicated entry
   * points collapse into one parameterized `sync(window)` —
@@ -25,18 +26,25 @@ object SyncApp {
     val spark = source.sparkSession
     val state = StateStore.readOrCreate(spark, paths.state)
     val r = SyncEngine.run(source, state, windowStart, windowEnd)
-    // No lineage break needed: overwrite publishes a new snapshot version
-    // and leaves the files `state` reads in place. (A localCheckpoint
-    // here would pin the state in executor storage and die with an
-    // executor at cluster scale.)
-    val next = r.newState
-      .select(StateStore.StateSchema.fieldNames.map(col): _*)
-    val summary = r.summary.collect()
-      .map(row => row.getString(0) -> row.getLong(1)).toMap
-    StateStore.append(r.audit, paths.audit)
-    StateStore.append(r.conflicts, paths.conflicts)
-    StateStore.overwrite(next, paths.state)
-    RunSummary(summary)
+    // The summary and the three writes are projections of the classified
+    // frame: persist it so the state window and the full-outer join run
+    // once per run instead of once per action. MEMORY_AND_DISK rather
+    // than a localCheckpoint: a lost block recomputes from lineage, which
+    // stays valid because overwrite publishes a new snapshot version and
+    // leaves the files `state` reads in place (a localCheckpoint would
+    // pin the only copy in executor storage and die with an executor at
+    // cluster scale).
+    r.classified.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val next = r.newState
+        .select(StateStore.StateSchema.fieldNames.map(col): _*)
+      val summary = r.summary.collect()
+        .map(row => row.getString(0) -> row.getLong(1)).toMap
+      StateStore.append(r.audit, paths.audit)
+      StateStore.append(r.conflicts, paths.conflicts)
+      StateStore.overwrite(next, paths.state)
+      RunSummary(summary)
+    } finally r.classified.unpersist()
   }
 
   /** The nightly entry point: lookback window ending today. */

@@ -24,10 +24,13 @@ import org.apache.spark.sql.functions._
   *  - protected columns pass through verbatim on updates (`Code.gs:1836-1844`)
   *
   * Spark-first shape: ONE full-outer join on the key + `when` routing — the
-  * reference's per-row probe loop collapses into a single shuffle; every
-  * output (inserts, updates, movements, conflicts, deletions, audit, new
-  * state) is a filter/projection of the same classified delta, so caching
-  * the delta serves all sinks. No driver-side state, no collect.
+  * reference's per-row probe loop collapses into a single shuffle, and the
+  * state is scanned and windowed once. Every output (inserts, updates,
+  * movements, conflicts, deletions, audit, summary, new state) is a
+  * filter/projection of the one `classified` frame, so a caller that
+  * caches that frame serves all sinks from it: `SyncApp.sync` persists it
+  * for the run's four actions, `SyncQueries` caches it per fixture dir.
+  * No driver-side state, no collect.
   */
 object SyncEngine {
 
@@ -40,6 +43,7 @@ object SyncEngine {
     "servicio", "banco", "monto") ++ ProtectedCols
 
   final case class SyncResult(
+      classified: DataFrame, // the join: delta rows + shadow rows (NULL action)
       delta: DataFrame, // every routed row: folio, action, s_*/e_* fields
       duplicates: DataFrame, // D1 losers
       newState: DataFrame, // recomputed destination (all partitions)
@@ -110,17 +114,19 @@ object SyncEngine {
     val (kept, duplicates) = dedupFirstWins(source)
     val s = kept.select(SrcCols.map(c => col(c).as(s"s_$c")): _*)
 
-    // one state row per folio: fixed-priority probe order (J2 semantics)
-    val stateRanked = state.withColumn("e_rank",
+    // one state row per folio: fixed-priority probe order (J2 semantics).
+    // Only rank 1 can match; corrupt extra rows (same folio under several
+    // partitions) come out of the same join unmatched — shadow rows that
+    // ride along untouched, like sheets the reference never probes past
+    // first match — so the state is scanned and windowed once.
+    val e = state.select(StateCols.map(c => col(c).as(s"e_$c")) :+
       row_number().over(Window.partitionBy(col("folio"))
-        .orderBy(partitionPriority(col("partition")), col("partition"))))
-    val e = stateRanked.filter(col("e_rank") === 1).drop("e_rank")
-      .select(StateCols.map(c => col(c).as(s"e_$c")): _*)
-    // corrupt extra rows (same folio under several partitions) ride along
-    // untouched, like sheets the reference never probes past first match
-    val eShadow = stateRanked.filter(col("e_rank") > 1).drop("e_rank")
+        .orderBy(partitionPriority(col("partition")), col("partition")))
+        .as("e_rank"): _*)
 
-    val joined = s.join(e, col("s_folio") <=> col("e_folio"), "full_outer")
+    val joined = s.join(e,
+      col("s_folio") <=> col("e_folio") && col("e_rank") === 1, "full_outer")
+    val isShadow = col("e_rank") > 1
 
     val inWindow = col("e_fecha").between(lit(windowStart), lit(windowEnd))
     val samePartition = col("s_metodo") === col("e_partition")
@@ -140,7 +146,8 @@ object SyncEngine {
       col("e_afiliacion"), col("e_lote"), col("e_verificado"))
 
     val action =
-      when(col("e_folio").isNull, Actions.Nuevo)
+      when(isShadow, lit(null).cast("string"))
+        .when(col("e_folio").isNull, Actions.Nuevo)
         .when(col("s_folio").isNull,
           when(inWindow, Actions.Eliminacion).otherwise(Actions.FueraVentana))
         .when(!samePartition,
@@ -148,13 +155,17 @@ object SyncEngine {
         .when(hayCambios, Actions.Actualizacion)
         .otherwise(Actions.SinCambios)
 
-    val delta = joined
+    val classified = joined
       .withColumn("action", action)
       .withColumn("chg_fecha", coalesce(chgFecha, lit(false)))
       .withColumn("chg_cliente", coalesce(chgCliente, lit(false)))
       .withColumn("chg_servicio", coalesce(chgServicio, lit(false)))
       .withColumn("chg_monto", coalesce(chgMonto, lit(false)))
       .withColumn("chg_banco", coalesce(chgBanco, lit(false)))
+      .drop("e_rank")
+    val delta = classified.filter(col("action").isNotNull)
+    val shadow = classified.filter(col("action").isNull)
+      .select(StateCols.map(c => col(s"e_$c").as(c)): _*)
 
     // ---------------------------------------------------------- new state
     val keepOld = delta
@@ -183,7 +194,7 @@ object SyncEngine {
           if (c == "conciliado" || c == "recibo" || c == "verificado")
             "boolean" else "string").as(c)): _*)
     val newState = keepOld.unionByName(updated).unionByName(insertedOrMoved)
-      .unionByName(eShadow.select(StateCols.map(col): _*))
+      .unionByName(shadow)
 
     // ---------------------------------------------------------- conflicts
     val conflicts = delta.filter(col("action") === Actions.Conflicto)
@@ -253,7 +264,8 @@ object SyncEngine {
 
     val summary = delta.groupBy(col("action")).agg(count(lit(1)).as("n"))
 
-    SyncResult(delta, duplicates, newState, conflicts, audit, summary)
+    SyncResult(classified, delta, duplicates, newState, conflicts, audit,
+      summary)
   }
 
   private val TarjetaRender = "^Afiliación: (.*); Lote: (.*)$"

@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions._
 object SyncQueries {
 
   /** One sync result per (session, dir): ~20 driver queries are
-    * projections of the same classified delta, so derive it once and
-    * cache the delta frame. A cache clear (the bench does one per timed
-    * query) simply reverts reuse to recomputation — memoizing the plan
-    * object never changes results, only avoids rebuilding the DAG. */
+    * projections of the same classified frame, so derive it once and
+    * cache `classified` — not `delta`, which would leave `s5_state_merge`'s
+    * shadow rows (the NULL-action side of the same frame) re-running the
+    * join. A cache clear (the bench does one per timed query) simply
+    * reverts reuse to recomputation — memoizing the plan object never
+    * changes results, only avoids rebuilding the DAG. */
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), SyncEngine.SyncResult]()
 
@@ -22,7 +24,7 @@ object SyncQueries {
       val r = SyncEngine.run(SyncFixture.source(ss, dir),
         SyncFixture.state(ss, dir),
         SyncFixture.WindowStart, SyncFixture.WindowEnd)
-      r.delta.cache()
+      r.classified.cache()
       r
     })
 

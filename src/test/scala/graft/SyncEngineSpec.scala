@@ -52,7 +52,7 @@ class SyncEngineSpec extends SparkSpec {
     ("TRANSFERENCIA", "F6", "2025-11-03", 100.0, None, None, None), // deleted
     ("TRANSFERENCIA", "F7", "2025-10-01", 100.0, None, None, None), // out of win
     ("TARJETA", "F9", "2025-11-05", 100.0, None, None, None), // probe hit 1st
-    ("EFECTIVO", "F9", "2025-11-05", 100.0, None, None, None))) // shadow
+    ("EFECTIVO", "F9", "2025-11-05", 100.0, None, Some("sombra"), None))) // shadow
 
   // cache the routed outputs: 9 tests share them, and every collect would
   // otherwise re-execute the full join DAG
@@ -126,6 +126,26 @@ class SyncEngineSpec extends SparkSpec {
     val f9 = r1.delta.filter($"s_folio" === "F9").collect().head
     assert(f9.getAs[String]("e_partition") === "TARJETA")
     assert(r1.newState.filter($"folio" === "F9").count() === 2)
+
+    // the shadow row leaves the one join unmatched with a NULL action...
+    val efectivoF9 = $"folio" === "F9" && $"partition" === "EFECTIVO"
+    val shadow = state.filter(efectivoF9)
+      .select(r1.newState.columns.map(col): _*).collect().toSeq
+    val inClassified = r1.classified.filter($"action".isNull)
+      .select(r1.newState.columns.map(c => col(s"e_$c").as(c)): _*).collect()
+    assert(inClassified.toSeq === shadow)
+    // ...lands in the new state field for field, next to the moved row...
+    assert(r1.newState.filter(efectivoF9).collect().count(_ == shadow.head) === 1)
+    // ...and is no delta row, audit row or summary count
+    assert(r1.delta.filter($"action".isNull ||
+      ($"e_folio" === "F9" && $"e_partition" === "EFECTIVO"))
+      .count() === 0)
+    assert(r1.audit.filter($"folio" === "F9")
+      .select($"accion", $"detalle").as[(String, String)].collect().toSeq ===
+      Seq((Actions.CambioMetodo, "TARJETA → EFECTIVO")))
+    val summary = r1.summary.as[(String, Long)].collect().toMap
+    assert(!summary.contains(null))
+    assert(summary.values.sum === r1.delta.count())
   }
 
   test("audit covers update/move/conflict/delete/duplicate") {
