@@ -56,33 +56,32 @@ object ScaleProbe {
 
   private def ensureSf1(spark: SparkSession, src: String,
       dst: String): Unit = {
-    val marker = java.nio.file.Paths.get(dst, "_built")
-    if (java.nio.file.Files.exists(marker)) return
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(dst))
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    val embs = spark.read.parquet(s"$src/embeddings.parquet")
-    val docReps = (0 until Replicas).map { r =>
-      docs.select(
-        (col("doc_id") + lit(r * Stride)).as("doc_id"),
-        concat_ws(" ", transform(split(col("text"), "\\s+"),
-          w => when(w === "", w).otherwise(concat(w, lit(s"x$r")))))
-          .as("text"),
-        col("lang"), col("source"), col("n_chars"))
+    graft.sources.StoreFiles.markerGate(spark, dst,
+        s"""{"replicas":$Replicas,"stride":$Stride}""") {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dst))
+      val docs = spark.read.parquet(s"$src/documents.parquet")
+      val embs = spark.read.parquet(s"$src/embeddings.parquet")
+      val docReps = (0 until Replicas).map { r =>
+        docs.select(
+          (col("doc_id") + lit(r * Stride)).as("doc_id"),
+          concat_ws(" ", transform(split(col("text"), "\\s+"),
+            w => when(w === "", w).otherwise(concat(w, lit(s"x$r")))))
+            .as("text"),
+          col("lang"), col("source"), col("n_chars"))
+      }
+      docReps.reduce(_ unionByName _)
+        .repartition(8).write.parquet(s"$dst/documents.parquet")
+      val embReps = (0 until Replicas).map { r =>
+        val signs = typedLit((0 until 64).map(sign(r, _)))
+        embs.select(
+          (col("vec_id") + lit(r * Stride)).as("vec_id"),
+          zip_with(col("embedding"), signs, (x, s) => x * s)
+            .as("embedding"),
+          col("label"))
+      }
+      embReps.reduce(_ unionByName _)
+        .repartition(4).write.parquet(s"$dst/embeddings.parquet")
     }
-    docReps.reduce(_ unionByName _)
-      .repartition(8).write.parquet(s"$dst/documents.parquet")
-    val embReps = (0 until Replicas).map { r =>
-      val signs = typedLit((0 until 64).map(sign(r, _)))
-      embs.select(
-        (col("vec_id") + lit(r * Stride)).as("vec_id"),
-        zip_with(col("embedding"), signs, (x, s) => x * s)
-          .as("embedding"),
-        col("label"))
-    }
-    embReps.reduce(_ unionByName _)
-      .repartition(4).write.parquet(s"$dst/embeddings.parquet")
-    java.nio.file.Files.createFile(marker)
     ()
   }
 

@@ -557,43 +557,38 @@ object ExtQueries {
       "sharded" -> sharded))
   }
 
-  /** JSONL round-trip fixture: the documents table exported as JSONL
+  /** TSV and JSONL round-trip fixtures: the documents table exported
     * plus one malformed line and one contract-violating (id-less but
-    * well-formed) line, written once per dataset dir (marker-gated). */
-  private def tsvFixture(s: SparkSession, d: String): String = {
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-tsv-${Integer.toHexString(d.hashCode)}")
-    val marker = root.resolve("_built")
-    if (!java.nio.file.Files.exists(marker)) {
-      val data = root.resolve("data")
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      graft.sources.TsvCorpus.write(Tables.documents(s, d),
-        data.toString)
-      java.nio.file.Files.write(data.resolve("bad-lines.tsv"),
-        ("notanumber\tsome text\ten\tweb\t10\n" +
-          "\twell-formed but no id\ten\tweb\t5\n")
-          .getBytes("UTF-8"))
-      java.nio.file.Files.write(marker, "1".getBytes("UTF-8"))
+    * well-formed) line, built once per dataset dir behind the
+    * build-once gate. */
+  private def tsvFixture(s: SparkSession, d: String): String =
+    textFixture(s, d, "tsv") { data =>
+      graft.sources.TsvCorpus.write(Tables.documents(s, d), data)
+      ("bad-lines.tsv", "notanumber\tsome text\ten\tweb\t10\n" +
+        "\twell-formed but no id\ten\tweb\t5\n")
     }
-    root.resolve("data").toString
-  }
 
-  private def jsonlFixture(s: SparkSession, d: String): String = {
-    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft-jsonl-${Integer.toHexString(d.hashCode)}")
-    val marker = root.resolve("_built")
-    if (!java.nio.file.Files.exists(marker)) {
-      val data = root.resolve("data")
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      graft.sources.JsonlCorpus.write(Tables.documents(s, d),
-        data.toString)
-      java.nio.file.Files.write(data.resolve("bad-lines.json"),
-        ("this is not json {\n" +
-          """{"text": "well-formed but no id", "lang": "en"}""" + "\n")
-          .getBytes("UTF-8"))
-      java.nio.file.Files.write(marker, "1".getBytes("UTF-8"))
+  private def jsonlFixture(s: SparkSession, d: String): String =
+    textFixture(s, d, "jsonl") { data =>
+      graft.sources.JsonlCorpus.write(Tables.documents(s, d), data)
+      ("bad-lines.json", "this is not json {\n" +
+        """{"text": "well-formed but no id", "lang": "en"}""" + "\n")
     }
-    root.resolve("data").toString
+
+  /** `write` exports into the data dir and names one extra file of bad
+    * lines; the root is deleted before every build. */
+  private def textFixture(s: SparkSession, d: String, fmt: String)(
+      write: String => (String, String)): String = {
+    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft-$fmt-${Integer.toHexString(d.hashCode)}")
+    val data = root.resolve("data")
+    graft.sources.StoreFiles.markerGate(s, root.toString,
+        s"""{"fixture":"$fmt"}""") {
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+      val (bad, lines) = write(data.toString)
+      java.nio.file.Files.write(data.resolve(bad), lines.getBytes("UTF-8"))
+    }
+    data.toString
   }
 
   /** The accepted-corpus side of the incremental dedup split: everything

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.sources.StoreFiles.{readText, writeText}
 
 /** Incremental view maintenance for a keyed rollup: the materialized
   * aggregate persists as MERGEABLE partial-aggregate rows
@@ -95,9 +94,7 @@ object AggStore {
   private def currentManifest(spark: SparkSession, path: String,
       branch: Option[String] = None): ManifestDir.Manifest = {
     val pfx = Branches.prefixOf(Prefix, branch)
-    ManifestDir.current(spark, path, pfx).getOrElse(
-      throw new IllegalStateException(
-        s"no committed aggregate state lineage '$pfx' under $path"))
+    ManifestDir.require(spark, path, pfx, "aggregate state")
   }
 
   /** The partial-aggregate rows for a slice of facts: one row per
@@ -178,34 +175,16 @@ object AggStore {
     }
   }
 
-  /** [[writeState]] gated by a recipe marker. `baseTag` names the
-    * slice of facts the base state was built from (e.g. the caller's
-    * holdout predicate) so changing the slice REBUILDS instead of
-    * silently merging a new delta into stale partials — the same
-    * reason TokenizerStore's recipe carries its merge count. Returns
-    * build seconds, or None when the committed state is warm. */
+  /** [[writeState]] behind the build-once gate
+    * ([[SnapshotDir.ensureBuilt]]). `baseTag` names the slice of facts
+    * the base state was built from (e.g. the caller's holdout
+    * predicate), so changing the slice REBUILDS instead of silently
+    * merging a new delta into stale partials. Returns build seconds, or
+    * None when the committed state is warm. */
   def ensureState(events: DataFrame, path: String,
-      baseTag: String = ""): Option[Double] = {
-    val spark = events.sparkSession
-    val marker = s"$path/_built.json"
-    val recipe = AggStore.recipe(baseTag)
-    if (readText(spark, marker).contains(recipe) &&
-        SnapshotDir.current(spark, path, Prefix).isDefined) None
-    else {
-      val t0 = System.nanoTime()
-      // recipe change = new state: old-recipe partials are meaningless
-      // under the new one, so rebuild from a clean root (deterministic
-      // version numbering, no cross-format debris) — wiped UNDER the
-      // (reentrant) writer lock so a live concurrent writer is
-      // excluded rather than having its lock deleted mid-commit
-      SnapshotDir.withWriterLock(spark, path) {
-        SnapshotDir.wipeRootKeepLock(spark, path)
-        writeState(events, path)
-      }
-      writeText(spark, marker, recipe)
-      Some((System.nanoTime() - t0) / 1e9)
-    }
-  }
+      baseTag: String = ""): Option[Double] =
+    SnapshotDir.ensureBuilt(events.sparkSession, path, Prefix,
+      AggStore.recipe(baseTag))(writeState(events, path))
 
   /** Stored partials of a lineage's current committed version. */
   def readState(spark: SparkSession, path: String,
@@ -348,8 +327,8 @@ object AggStore {
       delta: DataFrame, batchTag: Option[String] = None,
       branch: Option[String] = None): Unit = {
     val pfx = Branches.prefixOf(Prefix, branch)
-    val claimed = SnapshotDir.versions(spark, path, pfx)
-      .filter(_._2).map(_._1).foldLeft(0L)(math.max)
+    val claimed =
+      SnapshotDir.committed(spark, path, pfx).lastOption.getOrElse(0L)
     require(claimed > 0L,
       s"no committed lineage '$pfx' at $path — bootstrap first")
     val cur = currentManifest(spark, path, branch)

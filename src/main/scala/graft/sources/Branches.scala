@@ -45,8 +45,7 @@ private[graft] object Branches {
 
   private def mainVersion(spark: SparkSession, root: String,
       mainPrefix: String): Long =
-    SnapshotDir.versions(spark, root, mainPrefix)
-      .filter(_._2).map(_._1).foldLeft(0L)(math.max)
+    SnapshotDir.committed(spark, root, mainPrefix).lastOption.getOrElse(0L)
 
   /** Create branch `name`: commit main's current manifest (plus the
     * cut-point marker) as the branch's first version. Zero data
@@ -57,9 +56,7 @@ private[graft] object Branches {
       val bp = branchPrefix(mainPrefix, name)
       require(SnapshotDir.current(spark, root, bp).isEmpty,
         s"branch '$name' already exists under $root")
-      val m = ManifestDir.current(spark, root, mainPrefix).getOrElse(
-        throw new IllegalStateException(
-          s"no committed main lineage '$mainPrefix' under $root"))
+      val m = ManifestDir.require(spark, root, mainPrefix, "main")
       ManifestDir.commit(spark, root, bp,
         m.withMeta(BaseKey, mainVersion(spark, root, mainPrefix)
           .toString))
@@ -105,9 +102,7 @@ private[graft] object Branches {
       name: String): Long =
     SnapshotDir.withWriterLock(spark, root) {
       val bp = branchPrefix(mainPrefix, name)
-      val bm = ManifestDir.current(spark, root, bp).getOrElse(
-        throw new IllegalStateException(
-          s"no committed branch '$name' under $root"))
+      val bm = ManifestDir.require(spark, root, bp, "branch")
       val baseV = bm.meta.getOrElse(BaseKey,
         throw new IllegalStateException(
           s"branch '$name' carries no $BaseKey marker — " +
@@ -195,18 +190,15 @@ private[graft] object Branches {
     while (true) {
       try {
         return SnapshotDir.withWriterLock(spark, root) {
-          val nowV = SnapshotDir.versions(spark, root, prefix)
-            .filter(_._2).map(_._1).foldLeft(0L)(math.max)
+          val nowV = SnapshotDir.committed(spark, root, prefix)
+            .lastOption.getOrElse(0L)
           if (nowV != claimedVersion)
             throw new java.util.ConcurrentModificationException(
               s"lineage '$prefix' advanced $claimedVersion -> $nowV " +
                 s"under $root since this batch was computed — its " +
                 "base is stale; recompute against the current " +
                 "version and retry")
-          val m = ManifestDir.current(spark, root, prefix).getOrElse(
-            throw new IllegalStateException(
-              s"no committed lineage '$prefix' under $root"))
-          commit(m)
+          commit(ManifestDir.require(spark, root, prefix, "store"))
         }
       } catch {
         // the root lock is held only across another writer's commit

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.StoreFiles.{readText, writeText}
 
 /** Persisted similarity-graph edge list — the near-dup pair table the
   * embedding curation queries share. At corpus scale the LSH pair list
@@ -65,9 +64,7 @@ object EdgeStore {
 
   private def manifestOf(spark: SparkSession, path: String,
       prefix: String): ManifestDir.Manifest =
-    ManifestDir.current(spark, path, prefix).getOrElse(
-      throw new IllegalStateException(
-        s"no committed edge store lineage '$prefix' under $path"))
+    ManifestDir.require(spark, path, prefix, "edge store")
 
   private def prefixOf(branch: Option[String]): String =
     Branches.prefixOf(Prefix, branch)
@@ -139,41 +136,22 @@ object EdgeStore {
   }
 
   /** Build (or confirm warm) the embedding near-dup pair store:
-    * [[graft.operators.Similarity.nearDupPairsLsh]] persisted behind a
-    * recipe marker (marker last — a crash mid-build leaves no marker
-    * and rebuilds; a recipe change rebuilds), alongside the banded
-    * signature relation that lets later batches admit against the
-    * corpus without re-banding it. Returns the build seconds, or None
-    * when the warm store was reused. */
+    * [[graft.operators.Similarity.nearDupPairsLsh]] persisted behind
+    * the build-once gate ([[SnapshotDir.ensureBuilt]]), alongside the
+    * banded signature relation that lets later batches admit against
+    * the corpus without re-banding it. Returns the build seconds, or
+    * None when the warm store was reused. */
   def ensureNearDupPairs(embeddings: DataFrame, path: String,
       threshold: Double, bands: Int, rowsPerBand: Int, dim: Int)
-      : Option[Double] = {
-    val spark = embeddings.sparkSession
-    val marker = s"$path/_built.json"
-    val recipe = EdgeStore.recipe(threshold, bands, rowsPerBand, dim)
-    if (readText(spark, marker).contains(recipe) &&
-        SnapshotDir.current(spark, path, Prefix).isDefined) None
-    else {
-      val t0 = System.nanoTime()
-      // a recipe change invalidates EVERY stored version (reading
-      // old-recipe pairs under the new recipe is meaningless, and a
-      // format bump may not even parse), so the rebuild starts from a
-      // clean root — version numbering restarts at 1, deterministic
-      // regardless of what an earlier recipe left behind
-      // wiped UNDER the (reentrant) writer lock so a live concurrent
-      // writer is excluded rather than having its lock deleted
-      SnapshotDir.withWriterLock(spark, path) {
-        SnapshotDir.wipeRootKeepLock(spark, path)
-        writePairs(graft.operators.Similarity.nearDupPairsLsh(
-          embeddings, threshold, bands = bands,
-          rowsPerBand = rowsPerBand, dim = dim),
-          graft.operators.Similarity.bandRelation(embeddings, bands,
-            rowsPerBand, dim), path)
-      }
-      writeText(spark, marker, recipe)
-      Some((System.nanoTime() - t0) / 1e9)
+      : Option[Double] =
+    SnapshotDir.ensureBuilt(embeddings.sparkSession, path, Prefix,
+        EdgeStore.recipe(threshold, bands, rowsPerBand, dim)) {
+      writePairs(graft.operators.Similarity.nearDupPairsLsh(
+        embeddings, threshold, bands = bands,
+        rowsPerBand = rowsPerBand, dim = dim),
+        graft.operators.Similarity.bandRelation(embeddings, bands,
+          rowsPerBand, dim), path)
     }
-  }
 
   /** Stored pair list `(id_a, id_b, cos)` of the current version —
     * of main, or of a branch lineage when `branch` is given. */
@@ -281,8 +259,8 @@ object EdgeStore {
       dim: Int, branch: Option[String] = None): Long = {
     val spark = batch.sparkSession
     val pfx = prefixOf(branch)
-    val claimed = SnapshotDir.versions(spark, path, pfx)
-      .filter(_._2).map(_._1).foldLeft(0L)(math.max)
+    val claimed =
+      SnapshotDir.committed(spark, path, pfx).lastOption.getOrElse(0L)
     require(claimed > 0L,
       s"no committed lineage '$pfx' under $path — bootstrap first")
     val m = manifestOf(spark, path, pfx)

@@ -67,18 +67,10 @@ object FingerprintStore {
     s"""{"v":$FormatVersion,"n":$n,"h":$numHashes,""" +
       s""""b":$bands,"df":$maxShingleDf,"id":"$idCol","text":"$textCol"}"""
 
-  private def writeText(spark: SparkSession, p: String, s: String): Unit =
-    StoreFiles.writeText(spark, p, s)
-
-  private def readText(spark: SparkSession, p: String): Option[String] =
-    StoreFiles.readText(spark, p)
-
   private def currentManifest(spark: SparkSession, path: String,
       branch: Option[String] = None): ManifestDir.Manifest = {
     val pfx = Branches.prefixOf(Prefix, branch)
-    ManifestDir.current(spark, path, pfx).getOrElse(
-      throw new IllegalStateException(
-        s"no committed fingerprint store lineage '$pfx' at $path"))
+    ManifestDir.require(spark, path, pfx, "fingerprint store")
   }
 
   /** ZERO-COPY BRANCH of the fingerprint store — the generic
@@ -156,37 +148,20 @@ object FingerprintStore {
     SnapshotDir.gc(spark, path, Prefix)
   }
 
-  /** [[writeFingerprints]] gated by a recipe marker, mirroring
-    * [[VectorIndexStore.ensureIvfPq]]: skip the corpus-sized build when
-    * a store with the SAME recipe is already committed. Returns the
+  /** [[writeFingerprints]] behind the build-once gate
+    * ([[SnapshotDir.ensureBuilt]]): skip the corpus-sized build when a
+    * store with the SAME recipe is already committed. Returns the
     * build seconds, or None when the warm store was reused. */
   def ensureFingerprints(docs: DataFrame, path: String,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 3,
       numHashes: Int = 8, bands: Int = 4,
-      maxShingleDf: Int = Dedup.DefaultMaxShingleDf): Option[Double] = {
-    val spark = docs.sparkSession
-    val marker = s"$path/_built.json"
-    val recipe = FingerprintStore.recipe(n, numHashes, bands,
-      maxShingleDf, idCol, textCol)
-    if (readText(spark, marker).contains(recipe) &&
-      SnapshotDir.current(spark, path, Prefix).isDefined) None
-    else {
-      val t0 = System.nanoTime()
-      // recipe change = new store: old-recipe versions are meaningless
-      // under the new one, so rebuild from a clean root (deterministic
-      // version numbering, no cross-format debris) — wiped UNDER the
-      // (reentrant) writer lock so a live concurrent writer is
-      // excluded rather than having its lock deleted mid-commit
-      SnapshotDir.withWriterLock(spark, path) {
-        SnapshotDir.wipeRootKeepLock(spark, path)
-        writeFingerprints(docs, path, idCol, textCol, n, numHashes,
-          bands, maxShingleDf)
-      }
-      // marker last: a crash mid-build leaves no marker → rebuild
-      writeText(spark, marker, recipe)
-      Some((System.nanoTime() - t0) / 1e9)
+      maxShingleDf: Int = Dedup.DefaultMaxShingleDf): Option[Double] =
+    SnapshotDir.ensureBuilt(docs.sparkSession, path, Prefix,
+        FingerprintStore.recipe(n, numHashes, bands, maxShingleDf, idCol,
+          textCol)) {
+      writeFingerprints(docs, path, idCol, textCol, n, numHashes, bands,
+        maxShingleDf)
     }
-  }
 
   /** True once a committed store version exists at `path`. */
   def exists(spark: SparkSession, path: String): Boolean =
@@ -313,8 +288,8 @@ object FingerprintStore {
       bands: Int = 4, maxShingleDf: Int = Dedup.DefaultMaxShingleDf,
       branch: Option[String] = None): Unit = {
     val pfx = Branches.prefixOf(Prefix, branch)
-    val claimed = SnapshotDir.versions(spark, path, pfx)
-      .filter(_._2).map(_._1).foldLeft(0L)(math.max)
+    val claimed =
+      SnapshotDir.committed(spark, path, pfx).lastOption.getOrElse(0L)
     require(claimed > 0L,
       s"no committed lineage '$pfx' at $path — bootstrap first")
     val (buckets, arrays) = fingerprints(accepted, idCol, textCol, n,

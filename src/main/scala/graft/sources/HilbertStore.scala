@@ -86,9 +86,7 @@ object HilbertStore {
 
   private def currentManifest(spark: SparkSession,
       path: String): ManifestDir.Manifest =
-    ManifestDir.current(spark, path, Prefix).getOrElse(
-      throw new IllegalStateException(
-        s"no committed hilbert store under $path"))
+    ManifestDir.require(spark, path, Prefix, "hilbert store")
 
   private def tagsOf(m: ManifestDir.Manifest): Set[String] =
     m.meta.get(TailTagsKey)
@@ -120,35 +118,22 @@ object HilbertStore {
     parsed.groupBy(_._1).values.map(_.maxBy(_._2)._3).toSet ++ opaque
   }
 
-  /** Recipe-gated build of version 1 (the
-    * [[ZOrderStore.ensureZOrdered]] protocol, on the manifest
-    * layout). A recipe change rebuilds from a clean root — stale
-    * layouts under another recipe are meaningless. Returns build
-    * seconds, or None when warm. */
+  /** Version 1 behind the build-once gate
+    * ([[SnapshotDir.ensureBuilt]]), on the manifest layout. Returns
+    * build seconds, or None when warm. */
   def ensureHilbert(df: DataFrame, path: String, aCol: String,
       bCol: String, bits: Int, files: Int): Option[Double] = {
     val spark = df.sparkSession
-    val marker = s"$path/_built.json"
     val recipe =
       s"""{"curve":"hilbert","fmt":3,"a":"$aCol","b":"$bCol",""" +
         s""""bits":$bits,"files":$files}"""
-    if (StoreFiles.readText(spark, marker).contains(recipe) &&
-        SnapshotDir.current(spark, path, Prefix).isDefined) None
-    else {
-      val t0 = System.nanoTime()
-      SnapshotDir.withWriterLock(spark, path) {
-        // wipe inside the lock (sparing the held lock file): a live
-        // concurrent writer is excluded rather than unlocked mid-commit
-        SnapshotDir.wipeRootKeepLock(spark, path)
-        val seg = ManifestDir.segDir(ManifestDir.newSegmentId(),
-          ClusteredRel)
-        writeHilbert(df, s"$path/$seg", aCol, bCol, bits, files)
-        ManifestDir.commit(spark, path, Prefix, ManifestDir.Manifest(
-          Map(ClusteredRel -> Vector(seg)), Map.empty))
-        ()
-      }
-      StoreFiles.writeText(spark, marker, recipe)
-      Some((System.nanoTime() - t0) / 1e9)
+    SnapshotDir.ensureBuilt(spark, path, Prefix, recipe) {
+      val seg = ManifestDir.segDir(ManifestDir.newSegmentId(),
+        ClusteredRel)
+      writeHilbert(df, s"$path/$seg", aCol, bCol, bits, files)
+      ManifestDir.commit(spark, path, Prefix, ManifestDir.Manifest(
+        Map(ClusteredRel -> Vector(seg)), Map.empty))
+      ()
     }
   }
 
@@ -236,8 +221,8 @@ object HilbertStore {
     batchTag.foreach(t => require(!t.contains(","),
       s"tail tags join the comma-separated applied set: '$t'"))
     val spark = df.sparkSession
-    val claimed = SnapshotDir.versions(spark, path, Prefix)
-      .filter(_._2).map(_._1).foldLeft(0L)(math.max)
+    val claimed =
+      SnapshotDir.committed(spark, path, Prefix).lastOption.getOrElse(0L)
     require(claimed > 0L,
       s"no committed hilbert store at $path — build first")
     val seg = ManifestDir.segDir(ManifestDir.newSegmentId(), TailRel)
@@ -447,8 +432,7 @@ object HilbertStore {
 
   /** Committed main-lineage versions at `path`, ascending. */
   def committedVersions(spark: SparkSession, path: String): Seq[Long] =
-    SnapshotDir.versions(spark, path, Prefix)
-      .filter(_._2).map(_._1).sorted
+    SnapshotDir.committed(spark, path, Prefix)
 
   private def rectScanManifest(spark: SparkSession, path: String,
       m: ManifestDir.Manifest,

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.StoreFiles.{readText, writeText}
 
 /** Persisted bigram language model — the serving half of the
   * perplexity quality filter (the CCNet lifecycle: the model trains
@@ -48,9 +47,7 @@ object LmStore {
   private def currentManifest(spark: SparkSession, path: String,
       branch: Option[String] = None): ManifestDir.Manifest = {
     val pfx = Branches.prefixOf(Prefix, branch)
-    ManifestDir.current(spark, path, pfx).getOrElse(
-      throw new IllegalStateException(
-        s"no committed language model lineage '$pfx' under $path"))
+    ManifestDir.require(spark, path, pfx, "language model")
   }
 
   private def appliedTagsOf(cur: Option[ManifestDir.Manifest])
@@ -113,33 +110,14 @@ object LmStore {
     }
   }
 
-  /** [[writeModel]] gated by a recipe marker (marker last; a recipe
-    * mismatch or missing committed version rebuilds). Returns the
-    * training seconds, or None when warm. */
+  /** [[writeModel]] behind the build-once gate
+    * ([[SnapshotDir.ensureBuilt]]). Returns the training seconds, or
+    * None when warm. */
   def ensureModel(docs: DataFrame, path: String,
-      textCol: String = "text"): Option[Double] = {
-    val spark = docs.sparkSession
-    val marker = s"$path/_built.json"
-    val recipe = s"""{"v":$FormatVersion,"text":"$textCol"}"""
-    if (readText(spark, marker).contains(recipe) &&
-        SnapshotDir.current(spark, path, Prefix).isDefined) None
-    else {
-      val t0 = System.nanoTime()
-      // recipe change = new model: rebuild from a clean root
-      // (deterministic version numbering, no cross-format debris).
-      // The wipe is destructive across ALL lineages and history, so it
-      // runs UNDER the writer lock (reentrant — the inner write path's
-      // own acquire nests), sparing the held lock file: a live
-      // concurrent writer is excluded by the normal protocol instead
-      // of losing its `_writer.lock` out from under it mid-commit.
-      SnapshotDir.withWriterLock(spark, path) {
-        SnapshotDir.wipeRootKeepLock(spark, path)
-        writeModel(docs, path, textCol)
-      }
-      writeText(spark, marker, recipe)
-      Some((System.nanoTime() - t0) / 1e9)
-    }
-  }
+      textCol: String = "text"): Option[Double] =
+    SnapshotDir.ensureBuilt(docs.sparkSession, path, Prefix,
+      s"""{"v":$FormatVersion,"text":"$textCol"}""")(
+      writeModel(docs, path, textCol))
 
   /** ZERO-COPY BRANCH of the model ([[Branches]]): retract/compare on
     * a lineage without touching main, then promote or drop. */

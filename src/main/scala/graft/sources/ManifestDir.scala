@@ -85,7 +85,7 @@ private[graft] object ManifestDir {
   def write(spark: SparkSession, versionDir: String,
       m: Manifest): Unit = {
     def clean(s: String): String = {
-      require(!s.exists(c => c == '\t' || c == '\n' || c == '\r'),
+      Predef.require(!s.exists(c => c == '\t' || c == '\n' || c == '\r'),
         s"manifest fields must be tab/newline-free: $s")
       s
     }
@@ -112,7 +112,7 @@ private[graft] object ManifestDir {
         s"committed version $versionDir has no $FileName — not a " +
           "manifest store (or a pre-manifest layout; rebuild the store)"))
     val lines = text.split("\n").toSeq
-    require(lines.headOption.contains(Header),
+    Predef.require(lines.headOption.contains(Header),
       s"unrecognized manifest header in $versionDir/$FileName")
     val rels = scala.collection.mutable.LinkedHashMap[String,
       Vector[String]]()
@@ -140,7 +140,7 @@ private[graft] object ManifestDir {
       : Option[Map[String, (Long, Long)]] =
     StoreFiles.readText(spark, s"$versionDir/$StatsFile").map { text =>
       val lines = text.split("\n").toSeq
-      require(lines.headOption.contains(StatsHeader),
+      Predef.require(lines.headOption.contains(StatsHeader),
         s"unrecognized segstats header in $versionDir/$StatsFile")
       lines.drop(1).filter(_.nonEmpty).map(_.split("\t", -1) match {
         case Array(sd, f, b) => sd -> (f.toLong, b.toLong)
@@ -199,6 +199,13 @@ private[graft] object ManifestDir {
       : Option[Manifest] =
     SnapshotDir.current(spark, root, prefix).map(read(spark, _))
 
+  /** The current committed manifest of `prefix`'s lineage — loud when
+    * there is none (`what` names the store in the message). */
+  def require(spark: SparkSession, root: String, prefix: String,
+      what: String): Manifest =
+    current(spark, root, prefix).getOrElse(throw new IllegalStateException(
+      s"no committed $what lineage '$prefix' under $root"))
+
   /** Absolute dirs of `rel`'s segments under `root`. */
   def relationDirs(root: String, m: Manifest, rel: String): Seq[String] =
     m.segments(rel).map(sd => s"$root/$sd")
@@ -216,7 +223,7 @@ private[graft] object ManifestDir {
   def readRelation(spark: SparkSession, root: String, m: Manifest,
       rel: String): DataFrame = {
     val dirs = relationDirs(root, m, rel)
-    require(dirs.nonEmpty, s"manifest has no segments for relation " +
+    Predef.require(dirs.nonEmpty, s"manifest has no segments for relation " +
       s"'$rel' under $root")
     m.meta.get(schemaKey(rel)) match {
       case Some(js) =>
@@ -286,8 +293,7 @@ private[graft] object ManifestDir {
     val segRoot = new org.apache.hadoop.fs.Path(s"$root/seg")
     if (!fs.exists(segRoot)) return 0L
     val manifests = prefixes.flatMap(prefix =>
-      SnapshotDir.versions(spark, root, prefix)
-        .filter(_._2).map(_._1)
+      SnapshotDir.committed(spark, root, prefix)
         .map(v => tryRead(spark, s"$root/${SnapshotDir.name(prefix, v)}")))
     // a committed version WITHOUT a manifest (pre-manifest layout
     // debris) has unknown references — sweeping anything next to it

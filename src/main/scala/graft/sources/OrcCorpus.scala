@@ -41,8 +41,7 @@ object OrcCorpus {
       evolvedCol: String, idCol: String = "doc_id"): Option[Double] =
     StoreFiles.markerGate(docs.sparkSession, path,
       s"""{"evolved":"$evolvedCol","id":"$idCol"}""") {
-      // each generation dir is overwritten in place; a stale marker is
-      // replaced after both writes land (marker-last crash safety)
+      // each generation dir is overwritten in place
       docs.filter(col(idCol) % 2 === 0).drop(evolvedCol)
         .write.mode("overwrite").orc(s"$path/legacy")
       docs.filter(col(idCol) % 2 =!= 0)

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.StoreFiles.{readText, writeText}
 
 /** Persisted SCD2 dimension with incremental maintenance — the
   * MERGE-INTO twin of [[AggStore]] (facts get mergeable partials;
@@ -43,32 +42,20 @@ object Scd2Store {
 
   /** Publish the compacted history of `events` as the next version. */
   def writeState(events: DataFrame, path: String): Unit = {
-    val spark = events.sparkSession
-    SnapshotDir.withWriterLock(spark, path) {
-      val next = SnapshotDir.next(spark, path, Prefix)
-      val vdir = s"$path/${SnapshotDir.name(Prefix, next)}"
-      compact(events).write.mode(SaveMode.Overwrite).parquet(vdir)
-      SnapshotDir.commit(spark, path, Prefix, next)
-    }
-    SnapshotDir.gc(spark, path, Prefix)
+    SnapshotDir.publish(events.sparkSession, path, Prefix)(
+      compact(events).write.mode(SaveMode.Overwrite).parquet(_))
+    ()
   }
 
-  /** [[writeState]] gated by a recipe marker; `baseTag` names the
-    * base slice (rebuild on change). */
+  /** [[writeState]] behind the build-once gate
+    * ([[SnapshotDir.ensureBuilt]]); `baseTag` names the base slice
+    * (rebuild on change). */
   def ensureState(events: DataFrame, path: String,
       baseTag: String = ""): Option[Double] = {
-    val spark = events.sparkSession
-    val marker = s"$path/_built.json"
     val recipe =
       s"""{"v":$FormatVersion,"dim":"user_event_type","base":"$baseTag"}"""
-    if (readText(spark, marker).contains(recipe) &&
-        SnapshotDir.current(spark, path, Prefix).isDefined) None
-    else {
-      val t0 = System.nanoTime()
-      writeState(events, path)
-      writeText(spark, marker, recipe)
-      Some((System.nanoTime() - t0) / 1e9)
-    }
+    SnapshotDir.ensureBuilt(events.sparkSession, path, Prefix, recipe)(
+      writeState(events, path))
   }
 
   /** Stored history of the current committed version. */
@@ -86,15 +73,10 @@ object Scd2Store {
   /** Fold `delta` in as the next committed version. */
   def applyChanges(spark: SparkSession, path: String,
       delta: DataFrame): Unit = {
-    SnapshotDir.withWriterLock(spark, path) {
-      val merged =
-        merge(spark.read.parquet(currentDir(spark, path)), delta)
-      val next = SnapshotDir.next(spark, path, Prefix)
-      val vdir = s"$path/${SnapshotDir.name(Prefix, next)}"
-      merged.write.mode(SaveMode.Overwrite).parquet(vdir)
-      SnapshotDir.commit(spark, path, Prefix, next)
-    }
-    SnapshotDir.gc(spark, path, Prefix)
+    SnapshotDir.publish(spark, path, Prefix)(
+      merge(spark.read.parquet(currentDir(spark, path)), delta)
+        .write.mode(SaveMode.Overwrite).parquet(_))
+    ()
   }
 
   /** TAKEDOWN on the maintained dimension: drop EVERY history row of
@@ -106,17 +88,12 @@ object Scd2Store {
     * window, retention policy governing history as on every family. */
   def takedown(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String = "user_id"): Unit = {
-    SnapshotDir.withWriterLock(spark, path) {
-      val kept = spark.read.parquet(currentDir(spark, path))
+    SnapshotDir.publish(spark, path, Prefix)(
+      spark.read.parquet(currentDir(spark, path))
         .join(ids.select(col(idCol)).distinct(), Seq(idCol),
           "left_anti")
-      val next = SnapshotDir.next(spark, path, Prefix)
-      kept.write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/${SnapshotDir.name(Prefix, next)}")
-      SnapshotDir.commit(spark, path, Prefix, next)
-    }
-    SnapshotDir.gc(spark, path, Prefix)
-    spark.catalog.refreshByPath(path)
+        .write.mode(SaveMode.Overwrite).parquet(_))
+    ()
   }
 
   private def merge(stored: DataFrame, delta: DataFrame): DataFrame = {

@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
 private[graft] object SnapshotDir {
 
   private val CommitMarker = "_committed"
-  private val WriterLock = "_writer.lock"
+  private[sources] val WriterLock = "_writer.lock"
 
   /** Run `body` holding the root's writer lock — the guard for the
     * single-writer contract. Best-effort by design on stores without
@@ -202,20 +202,9 @@ private[graft] object SnapshotDir {
     (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
   }
 
-  /** Destructively reset `root` for a recipe rebuild — MUST be called
-    * inside [[withWriterLock]] on the same root: deletes every child
-    * EXCEPT the held lock file, so the wipe excludes live concurrent
-    * writers through the normal lock protocol instead of deleting a
-    * mid-commit writer's `_writer.lock` out from under it (which would
-    * silently break single-writer exclusion). All lineages, branches,
-    * and time-travel history under the root are gone — that is the
-    * point (a recipe change is a NEW store) — but only ever under the
-    * same exclusion every other mutation runs with. */
-  def wipeRootKeepLock(spark: SparkSession, root: String): Unit = {
-    require(heldLocks.get().getOrElse(root, 0) > 0,
-      s"wipeRootKeepLock outside the writer lock on $root — " +
-        "acquire withWriterLock first; a lock-free wipe can destroy " +
-        "a live writer's exclusion mid-commit")
+  /** Destructively reset `root` for a recipe rebuild: deletes every
+    * child except the lock file [[ensureBuilt]] holds. */
+  private def wipeRootKeepLock(spark: SparkSession, root: String): Unit = {
     val (fs, hp) = fsOf(spark, root)
     if (fs.exists(hp))
       fs.listStatus(hp).foreach { st =>
@@ -223,6 +212,43 @@ private[graft] object SnapshotDir {
           fs.delete(st.getPath, true)
       }
   }
+
+  /** The build-once gate of a versioned store: [[StoreFiles.markerGate]]
+    * where "warm" also needs a committed version under `prefix` (a tmp
+    * cleaner that ages out version dirs but spares the marker must
+    * rebuild, not serve a missing store). A rebuild is a NEW store:
+    * old-recipe versions are meaningless under the new recipe, so the
+    * whole root (every lineage, branch and history) is wiped first and
+    * version numbering restarts at 1. The wipe and `build` run under
+    * one reentrant writer lock, sparing the lock file itself, so a
+    * live concurrent writer is excluded by the normal protocol instead
+    * of losing its lock mid-commit; `build`'s own locked writes nest. */
+  def ensureBuilt(spark: SparkSession, root: String, prefix: String,
+      recipe: String)(build: => Unit): Option[Double] =
+    StoreFiles.markerGate(spark, root, recipe,
+        committed(spark, root, prefix).nonEmpty) {
+      withWriterLock(spark, root) {
+        wipeRootKeepLock(spark, root)
+        build
+      }
+    }
+
+  /** Publish one relation as `root`'s next `prefix` version: under the
+    * writer lock, claim the next number, `write(versionDir)`, commit,
+    * then [[gc]] with one version of grace; then drop the session's
+    * cached listings of `root`. Returns [[gc]]'s aged-out signal. The
+    * write may read the version it replaces — that version's files
+    * are never touched. */
+  def publish(spark: SparkSession, root: String, prefix: String)(
+      write: String => Unit): Boolean =
+    withWriterLock(spark, root) {
+      val v = next(spark, root, prefix)
+      write(s"$root/${name(prefix, v)}")
+      commit(spark, root, prefix, v)
+      val aged = gc(spark, root, prefix)
+      spark.catalog.refreshByPath(root)
+      aged
+    }
 
   def name(prefix: String, v: Long): String = f"$prefix$v%08d"
 
@@ -242,13 +268,20 @@ private[graft] object SnapshotDir {
       }
   }
 
+  private def committedOf(all: Seq[(Long, Boolean)]): Seq[Long] =
+    all.filter(_._2).map(_._1).sorted
+
+  /** Committed version numbers under `root` with the given prefix,
+    * ascending. */
+  def committed(spark: SparkSession, root: String,
+      prefix: String): Seq[Long] =
+    committedOf(versions(spark, root, prefix))
+
   /** Directory of the highest COMMITTED version, if any. */
   def current(spark: SparkSession, root: String,
-      prefix: String): Option[String] = {
-    val committed = versions(spark, root, prefix).filter(_._2).map(_._1)
-    if (committed.isEmpty) None
-    else Some(s"$root/${name(prefix, committed.max)}")
-  }
+      prefix: String): Option[String] =
+    committed(spark, root, prefix).lastOption
+      .map(v => s"$root/${name(prefix, v)}")
 
   /** Directory of a SPECIFIC committed version — the time-travel read.
     * None if the version was never committed or has been GC'd; callers
@@ -290,8 +323,7 @@ private[graft] object SnapshotDir {
       grace: Int = 1): Boolean = {
     val (fs, _) = fsOf(spark, root)
     val all = versions(spark, root, prefix)
-    val committed = all.filter(_._2).map(_._1)
-      .sorted(Ordering[Long].reverse)
+    val committed = committedOf(all).reverse
     val keep = committed.take(1 + grace).toSet
     all.filter { case (v, _) => !keep.contains(v) }
       .filter { case (v, isCommitted) =>

@@ -20,8 +20,12 @@ import org.apache.spark.sql.types._
   * atomic commit-marker create ([[SnapshotDir]]) — no rename, no instant
   * where the live state is missing, and a reader that already resolved
   * the previous version keeps its snapshot (GC retains one version of
-  * grace). Re-runs are idempotent because the sync itself is a fixpoint
-  * (SURVEY.md §7.4.1). At cluster scale the same code runs against
+  * grace). A re-run of a night commits the same state rows again (the
+  * merge is a fixpoint on state, SURVEY.md §7.4.1), but it is NOT
+  * idempotent as a whole: the audit and conflict appends carry no run
+  * id, so a re-run quarantines its conflicts again and re-logs its
+  * deletions and duplicates (a committed run record per sync is ROADMAP
+  * direction 2). At cluster scale the same code runs against
   * object storage; swap [[SnapshotDir]] for a table-format commit and
   * the layout stays identical. Single writer per state path (no
   * filesystem compare-and-swap arbitrates two committers).
@@ -112,36 +116,29 @@ object StateStore {
 
   /** S5 — overwrite-merge as a snapshot commit: the new state lands in
     * the next version directory and becomes visible at one atomic
-    * marker create; the previous version survives one more overwrite as
-    * the in-flight-reader grace window ([[SnapshotDir]]). The recompute
-    * typically READS the state it replaces — safe here by construction,
-    * since the old version's files are never touched by the write. */
+    * marker create ([[SnapshotDir.publish]]); the previous version
+    * survives one more overwrite as the in-flight-reader grace window.
+    * Once it has aged out, a pre-protocol root-file state goes too,
+    * still under the writer lock and sparing the lock file. */
   def overwrite(df: DataFrame, path: String): Unit = {
     val spark = df.sparkSession
     SnapshotDir.withWriterLock(spark, path) {
-      val next = SnapshotDir.next(spark, path, VersionPrefix)
-      df.write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/${SnapshotDir.name(VersionPrefix, next)}")
-      SnapshotDir.commit(spark, path, VersionPrefix, next)
+      val aged = SnapshotDir.publish(spark, path, VersionPrefix)(
+        df.write.mode(SaveMode.Overwrite).parquet(_))
+      if (aged) {
+        val p = new Path(path)
+        val f = fs(spark, p)
+        f.listStatus(p).filter(_.isFile).map(_.getPath)
+          .filter(q => q.getName != SnapshotDir.WriterLock &&
+            (q.getName.endsWith(".parquet") || q.getName.startsWith("_")))
+          .foreach(f.delete(_, false))
+      }
     }
-    if (SnapshotDir.gc(spark, path, VersionPrefix)) {
-      // a pre-protocol root-file state has aged out of its grace window
-      val p = new Path(path)
-      val f = fs(spark, p)
-      f.listStatus(p)
-        .filter(s => s.isFile && (s.getPath.getName.endsWith(".parquet")
-          || s.getPath.getName.startsWith("_")))
-        .foreach(s => f.delete(s.getPath, false))
-    }
-    // the session-level FileStatusCache would otherwise serve the listing
-    // of the replaced files to the next reader of this path
-    spark.catalog.refreshByPath(path)
   }
 
   /** Committed state versions at `path`, ascending — what a run can pin. */
   def committedVersions(spark: SparkSession, path: String): Seq[Long] =
-    SnapshotDir.versions(spark, path, VersionPrefix)
-      .filter(_._2).map(_._1).sorted
+    SnapshotDir.committed(spark, path, VersionPrefix)
 
   /** Time-travel read of a PINNED state version — the reproducibility
     * primitive: a training run records the version it consumed, and a

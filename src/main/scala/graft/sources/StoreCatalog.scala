@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the manifest-versioned [[EdgeStore]]; until now none of them could
   * be ASKED what they hold without reading source code. One call lists,
   * per registered family: the current committed version and how many
-  * committed versions are retained, the build recipe (the
-  * `_built.json` marker the ensure-gates stamp), the manifest's
+  * committed versions are retained, the build recipe (the marker
+  * [[StoreFiles.markerGate]] stamps), the manifest's
   * relation count and label freshness (manifest stores only), and the
   * file count / byte total — the loop a lakehouse format closes with
   * its metadata tables, closed here for the plain-parquet protocol.
@@ -106,7 +106,7 @@ object StoreCatalog {
           current.map(_._2),
           mainVersions.size.toLong,
           math.max(prefixes.size - 1, 0).toLong,
-          StoreFiles.readText(spark, s"$root/_built.json"),
+          StoreFiles.recipeOf(spark, root),
           manifest.map(_.relations.size.toLong),
           // freshness is a LABELS property: null (not false) for
           // manifest stores that carry no label relation at all

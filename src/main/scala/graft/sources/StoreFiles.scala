@@ -2,13 +2,11 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared sidecar-file I/O + the marker-gate protocol every persisted
-  * store uses (IVFPQ index, fingerprint store, Z-order layout, ORC
-  * fixture): small text files through the Hadoop FS API (so any
-  * scheme works), and build-once gating where the recipe marker is
-  * written LAST — a crash mid-build leaves no marker, so the next
-  * ensure rebuilds instead of serving a half-written store. One copy,
-  * one thing to keep correct. */
+/** Shared sidecar-file I/O and the build-once gate: small text files
+  * through the Hadoop FS API (so any scheme works), and [[markerGate]],
+  * the one place that reads or writes a store's `_built.json` recipe
+  * marker. Every recipe-gated store and fixture builds through it, the
+  * versioned ones via [[SnapshotDir.ensureBuilt]]. */
 private[graft] object StoreFiles {
 
   def fsOf(spark: SparkSession, p: String) = {
@@ -53,18 +51,23 @@ private[graft] object StoreFiles {
     }
   }
 
-  /** Run `build` unless `path/_built.json` already records `recipe`;
-    * marker written after the build lands. Returns build seconds, or
-    * None when warm. */
-  def markerGate(spark: SparkSession, path: String, recipe: String)(
-      build: => Unit): Option[Double] = {
-    val marker = s"$path/_built.json"
-    if (readText(spark, marker).contains(recipe)) None
+  private def markerOf(path: String): String = s"$path/_built.json"
+
+  /** The recipe the store at `path` was last built with, if any. */
+  def recipeOf(spark: SparkSession, path: String): Option[String] =
+    readText(spark, markerOf(path))
+
+  /** Run `build` unless `path/_built.json` already records `recipe` and
+    * `live` holds; returns build seconds, or None when warm. The marker
+    * is written LAST: a build that dies leaves no matching marker, so
+    * the next call rebuilds instead of serving a half-written store. */
+  def markerGate(spark: SparkSession, path: String, recipe: String,
+      live: => Boolean = true)(build: => Unit): Option[Double] =
+    if (recipeOf(spark, path).contains(recipe) && live) None
     else {
       val t0 = System.nanoTime()
       build
-      writeText(spark, marker, recipe)
+      writeText(spark, markerOf(path), recipe)
       Some((System.nanoTime() - t0) / 1e9)
     }
-  }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.StoreFiles.{readText, writeText}
 
 /** Persisted BPE tokenizer — the serving half of the tokenizer
   * lifecycle. Training ([[graft.operators.CorpusStats.bpeTrainVocab]])
@@ -52,9 +51,7 @@ object TokenizerStore {
   private def currentManifest(spark: SparkSession, path: String,
       branch: Option[String] = None): ManifestDir.Manifest = {
     val pfx = Branches.prefixOf(Prefix, branch)
-    ManifestDir.current(spark, path, pfx).getOrElse(
-      throw new IllegalStateException(
-        s"no committed tokenizer vocabulary lineage '$pfx' under $path"))
+    ManifestDir.require(spark, path, pfx, "tokenizer vocabulary")
   }
 
   /** Train on `docs` and publish the vocabulary + merge list as
@@ -89,31 +86,14 @@ object TokenizerStore {
     }
   }
 
-  /** [[writeVocab]] gated by a recipe marker (same protocol as the
-    * other stores: marker last, any recipe mismatch rebuilds, a
-    * missing committed version rebuilds even under a live marker).
-    * Returns the training seconds, or None when warm. */
+  /** [[writeVocab]] behind the build-once gate
+    * ([[SnapshotDir.ensureBuilt]]). Returns the training seconds, or
+    * None when warm. */
   def ensureVocab(docs: DataFrame, path: String, nMerges: Int,
-      textCol: String = "text"): Option[Double] = {
-    val spark = docs.sparkSession
-    val marker = s"$path/_built.json"
-    val recipe = s"""{"v":$FormatVersion,"merges":$nMerges,""" +
-      s""""text":"$textCol"}"""
-    if (readText(spark, marker).contains(recipe) &&
-        SnapshotDir.current(spark, path, Prefix).isDefined) None
-    else {
-      val t0 = System.nanoTime()
-      // format change = new store: rebuild from a clean root, wiped
-      // UNDER the (reentrant) writer lock so a live concurrent writer
-      // is excluded rather than having its lock deleted mid-commit
-      SnapshotDir.withWriterLock(spark, path) {
-        SnapshotDir.wipeRootKeepLock(spark, path)
-        writeVocab(docs, path, nMerges, textCol)
-      }
-      writeText(spark, marker, recipe)
-      Some((System.nanoTime() - t0) / 1e9)
-    }
-  }
+      textCol: String = "text"): Option[Double] =
+    SnapshotDir.ensureBuilt(docs.sparkSession, path, Prefix,
+      s"""{"v":$FormatVersion,"merges":$nMerges,"text":"$textCol"}""")(
+      writeVocab(docs, path, nMerges, textCol))
 
   /** The merge count the store was built with, parsed from its recipe
     * marker — the store is self-describing, so maintenance (takedown
@@ -121,7 +101,7 @@ object TokenizerStore {
     * trusting a caller to remember them. None when the marker is
     * missing (a store built through [[writeVocab]] directly). */
   def recipeMerges(spark: SparkSession, path: String): Option[Int] =
-    readText(spark, s"$path/_built.json").flatMap(txt =>
+    StoreFiles.recipeOf(spark, path).flatMap(txt =>
       """"merges":(\d+)""".r.findFirstMatchIn(txt)
         .map(_.group(1).toInt))
 
@@ -215,35 +195,22 @@ object TokenizerStore {
     }
   }
 
-  /** [[writeUnigramVocab]] behind the recipe marker; returns training
-    * seconds or None when warm. */
+  /** [[writeUnigramVocab]] behind the build-once gate
+    * ([[SnapshotDir.ensureBuilt]]); returns training seconds or None
+    * when warm. */
   def ensureUnigramVocab(docs: DataFrame, path: String, vocabSize: Int,
       maxPieceLen: Int, textCol: String = "text"): Option[Double] = {
-    val spark = docs.sparkSession
-    val marker = s"$path/_built.json"
     val recipe = s"""{"v":$FormatVersion,"kind":"unigram",""" +
       s""""size":$vocabSize,"maxlen":$maxPieceLen,"text":"$textCol"}"""
-    if (readText(spark, marker).contains(recipe) &&
-        SnapshotDir.current(spark, path, UniPrefix).isDefined) None
-    else {
-      val t0 = System.nanoTime()
-      // destructive wipe under the (reentrant) writer lock — see
-      // ensureVocab
-      SnapshotDir.withWriterLock(spark, path) {
-        SnapshotDir.wipeRootKeepLock(spark, path)
-        writeUnigramVocab(docs, path, vocabSize, maxPieceLen, textCol)
-      }
-      writeText(spark, marker, recipe)
-      Some((System.nanoTime() - t0) / 1e9)
-    }
+    SnapshotDir.ensureBuilt(docs.sparkSession, path, UniPrefix, recipe)(
+      writeUnigramVocab(docs, path, vocabSize, maxPieceLen, textCol))
   }
 
   /** The stored unigram piece table `(piece, cnt, s)`. */
   def readUnigramVocab(spark: SparkSession, path: String): DataFrame =
     ManifestDir.readRelation(spark, path,
-      ManifestDir.current(spark, path, UniPrefix).getOrElse(
-        throw new IllegalStateException(
-          s"no committed unigram vocabulary under $path")), UniRel)
+      ManifestDir.require(spark, path, UniPrefix, "unigram vocabulary"),
+      UniRel)
 
   /** Encode `docs` against the STORED unigram vocabulary — identical
     * output to [[graft.operators.CorpusStats.unigramTokenEncode]] over

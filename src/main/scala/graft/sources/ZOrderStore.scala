@@ -42,47 +42,26 @@ object ZOrderStore {
     * compact Z-interval. */
   def writeZOrdered(df: DataFrame, path: String, aCol: String,
       bCol: String, bits: Int, files: Int): Unit = {
-    val spark = df.sparkSession
-    SnapshotDir.withWriterLock(spark, path) {
-      val next = SnapshotDir.next(spark, path, VersionPrefix)
+    SnapshotDir.publish(df.sparkSession, path, VersionPrefix)(dir =>
       df.withColumn("zval",
           LayoutExpressions.zValue(col(aCol).cast("long"),
             col(bCol).cast("long"), bits))
         .repartitionByRange(files, col("zval"))
         .sortWithinPartitions("zval")
-        .write.parquet(s"$path/${SnapshotDir.name(VersionPrefix, next)}")
-      SnapshotDir.commit(spark, path, VersionPrefix, next)
-    }
-    SnapshotDir.gc(spark, path, VersionPrefix)
-    spark.catalog.refreshByPath(path)
+        .write.parquet(dir))
+    ()
   }
 
-  /** Marker-gated [[writeZOrdered]]: skip the write when the layout at
-    * `path` was already built with the same recipe (same gate protocol
-    * as `VectorIndexStore.ensureIvfPq` — marker written LAST, so a
-    * crash mid-write rebuilds instead of serving a half-written
-    * layout). A recipe/format change wipes the root UNDER the writer
-    * lock first (pre-versioned flat layouts rebuild clean). Returns
-    * build seconds, or None when warm. */
+  /** [[writeZOrdered]] behind the build-once gate
+    * ([[SnapshotDir.ensureBuilt]]); a format bump rebuilds
+    * pre-versioned flat layouts clean. Returns build seconds, or None
+    * when warm. */
   def ensureZOrdered(df: DataFrame, path: String, aCol: String,
       bCol: String, bits: Int, files: Int): Option[Double] = {
-    val spark = df.sparkSession
     val recipe = s"""{"fmt":$FormatVersion,"a":"$aCol","b":"$bCol",""" +
       s""""bits":$bits,"files":$files}"""
-    val warm = StoreFiles.readText(spark, s"$path/_built.json")
-      .contains(recipe) &&
-      SnapshotDir.current(spark, path, VersionPrefix).isDefined
-    if (warm) None
-    else {
-      val t0 = System.nanoTime()
-      SnapshotDir.withWriterLock(spark, path) {
-        SnapshotDir.wipeRootKeepLock(spark, path)
-        writeZOrdered(df, path, aCol, bCol, bits, files)
-      }
-      // marker last: a crash mid-build leaves no marker → rebuild
-      StoreFiles.writeText(spark, s"$path/_built.json", recipe)
-      Some((System.nanoTime() - t0) / 1e9)
-    }
+    SnapshotDir.ensureBuilt(df.sparkSession, path, VersionPrefix, recipe)(
+      writeZOrdered(df, path, aCol, bCol, bits, files))
   }
 
   /** TAKEDOWN on the layout: anti-join the removed `ids` out of the
@@ -95,24 +74,21 @@ object ZOrderStore {
     * through the normal GC grace window. */
   def takedown(spark: SparkSession, path: String, ids: DataFrame,
       idCol: String): Unit = {
-    SnapshotDir.withWriterLock(spark, path) {
+    SnapshotDir.publish(spark, path, VersionPrefix) { dir =>
       val cur = currentDir(spark, path)
       val (fs, _) = StoreFiles.fsOf(spark, path)
       val files = math.max(1, fs.listStatus(
           new org.apache.hadoop.fs.Path(cur))
         .count(s => s.isFile &&
           s.getPath.getName.endsWith(".parquet")))
-      val kept = spark.read.parquet(cur)
+      spark.read.parquet(cur)
         .join(ids.select(col(idCol)).distinct(), Seq(idCol),
           "left_anti")
-      val next = SnapshotDir.next(spark, path, VersionPrefix)
-      kept.repartitionByRange(files, col("zval"))
+        .repartitionByRange(files, col("zval"))
         .sortWithinPartitions("zval")
-        .write.parquet(s"$path/${SnapshotDir.name(VersionPrefix, next)}")
-      SnapshotDir.commit(spark, path, VersionPrefix, next)
+        .write.parquet(dir)
     }
-    SnapshotDir.gc(spark, path, VersionPrefix)
-    spark.catalog.refreshByPath(path)
+    ()
   }
 
   /** The current committed layout directory — loud when none. */
@@ -123,8 +99,7 @@ object ZOrderStore {
 
   /** Committed layout versions at `path`, ascending. */
   def committedVersions(spark: SparkSession, path: String): Seq[Long] =
-    SnapshotDir.versions(spark, path, VersionPrefix)
-      .filter(_._2).map(_._1).sorted
+    SnapshotDir.committed(spark, path, VersionPrefix)
 
   /** Rectangle scan over a Z-ordered layout: one pushed-down `zval`
     * range predicate does the file/row-group skipping, the two exact

@@ -86,6 +86,35 @@ class ExtensionsSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
   }
 
+  test("one store-commit protocol: gate, wipe, publish, listing") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root))
+    val sources = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString ->
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    // needle -> the only files that may spell it
+    val rules = Seq(
+      "_built" -> Set("StoreFiles.scala"),
+      "wipeRootKeepLock(" -> Set("SnapshotDir.scala"),
+      "SnapshotDir.next(" -> Set("SnapshotDir.scala", "ManifestDir.scala"),
+      "SnapshotDir.commit(" -> Set("SnapshotDir.scala", "ManifestDir.scala"),
+      ".filter(_._2).map(_._1)" -> Set("SnapshotDir.scala"))
+    val offenders = rules.flatMap { case (needle, allowed) =>
+      val hits = sources.collect {
+        case (f, src) if !allowed(f) && src.contains(needle) => f }
+      if (hits.isEmpty) None
+      else Some(s"$needle in ${hits.sorted.mkString(", ")}")
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+    // inside SnapshotDir the wipe has its definition and ONE caller,
+    // the versioned gate
+    val snap = sources.collectFirst {
+      case ("SnapshotDir.scala", src) => src }.get
+    assert("wipeRootKeepLock\\(".r.findAllMatchIn(snap).size === 2)
+  }
+
   private val d = "/root/testdata/sf0.001"
 
   test("table functions: the SQL path equals the Scala path row-for-row") {

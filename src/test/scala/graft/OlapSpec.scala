@@ -573,6 +573,17 @@ class OlapSpec extends SparkSpec {
     // the committed write-side twin equals the view
     Scd2Store.applyChanges(spark, root, delta)
     assert(norm(Scd2Store.readState(spark, root)) === norm(merged))
+    // a recipe change is a new store: the rebuild wipes the root and
+    // version numbering restarts at 1, as in every other gated store
+    val gated = java.nio.file.Files.createTempDirectory("scd2-gate").toString
+    def committed = graft.sources.SnapshotDir.versions(spark, gated, "scd2-")
+      .collect { case (v, true) => v }.sorted
+    assert(Scd2Store.ensureState(base, gated, "a").isDefined)
+    assert(Scd2Store.ensureState(base, gated, "a").isEmpty)
+    assert(Scd2Store.ensureState(base, gated, "b").isDefined)
+    assert(committed === Seq(1L))
+    assert(norm(Scd2Store.readState(spark, gated)) ===
+      norm(Scd2Store.compact(base)))
   }
 
   test("agg store: read-time merge equals the full recompute exactly") {

@@ -250,6 +250,20 @@ class StateStoreSpec extends SparkSpec {
         s"stale reclaim must not usurp a live long-running writer: $e")
     }
     assert(!lock.exists(), "long-running writer still releases its lock")
+    // the writer path's own commits never delete a LIVE lock: from the
+    // second overwrite on, gc reports the grace window full and the
+    // pre-protocol root-file cleanup runs — it must spare the lock
+    val held = tmpDir() + "/held"
+    val heldLock = new java.io.File(held, "_writer.lock")
+    SnapshotDir.withWriterLock(spark, held) {
+      (1 to 3).foreach { i =>
+        StateStore.overwrite(df, held)
+        assert(heldLock.exists(), s"overwrite $i deleted the held lock; " +
+          s"committed=${StateStore.committedVersions(spark, held)}")
+      }
+    }
+    assert(!heldLock.exists(), "the outer frame still releases its lock")
+    assert(StateStore.committedVersions(spark, held) === Seq(2L, 3L))
   }
 
   test("writer lock: true mutual exclusion under thread contention") {
